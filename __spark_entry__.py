@@ -67,42 +67,48 @@ def _side_path(kind: str) -> str:
 
 
 _SWEEP_DEAD_PID_AGE_S = 300       # dead-pid orphans: swept after 5 min
-_SWEEP_ANY_AGE_S = 24 * 3600      # any orphan: swept after 24 h
+_SWEEP_ANY_AGE_S = 24 * 3600      # any orphan: swept after 24 h (ctime)
 
 
 def _sweep_orphans(path: str) -> None:
     """Reclaim tmp/stale dirs left by crashed writers.  A dir is swept when
     its writer pid is dead AND it has been quiet for 5 minutes, or
-    unconditionally after 24 h.  The age guards cover the two /proc
-    blind spots: a writer in another PID namespace sharing /tmp (its pid
-    looks dead here, but an in-progress Spark write keeps creating and
-    renaming part files SOMEWHERE in the tree — under `_temporary/`
-    subdirs, which is why quietness is judged on the MAX mtime across the
-    whole tree, not the top-level dir whose mtime Spark only touches at
-    job start and commit), and pid REUSE (the orphan's pid number now
-    names an unrelated live process, so the 24 h catch-all reclaims it
-    regardless).  The tiny `.lock` files persist by design — unlinking a
-    file others may flock() races a third opener onto a different inode,
-    silently splitting the lock."""
+    unconditionally once its top-level dir is 24 h old.  The age guards
+    cover the two /proc blind spots: a writer in another PID namespace
+    sharing /tmp (its pid looks dead here, but an in-progress Spark write
+    keeps creating and renaming part files SOMEWHERE in the tree — under
+    `_temporary/` subdirs, which is why quietness is judged on the MAX
+    mtime across the whole tree, not the top-level dir whose mtime Spark
+    only touches at job start and commit), and pid REUSE (the orphan's pid
+    number now names an unrelated live process, so the 24 h catch-all
+    reclaims it regardless).  mtimes later than now (clock skew, an
+    archive copied with its timestamps) say nothing about quietness and
+    are ignored; the catch-all ages the top-level dir by its st_ctime,
+    which the kernel sets on every change and `utime` cannot move, so no
+    timestamp makes an orphan immortal.  The tiny `.lock` files persist
+    by design — unlinking a file others may flock() races a third opener
+    onto a different inode, silently splitting the lock."""
     import time
 
     now = time.time()
     for d in glob.glob(f"{path}.tmp.*") + glob.glob(f"{path}.stale.*"):
         try:
-            newest = os.stat(d).st_mtime
+            top = os.stat(d)
         except OSError:
             continue  # concurrently removed
+        mtimes = [top.st_mtime]
         for root, dirs, files in os.walk(d):
             for name in dirs + files:
                 try:
-                    t = os.stat(os.path.join(root, name)).st_mtime
+                    mtimes.append(os.stat(os.path.join(root, name)).st_mtime)
                 except OSError:
                     continue  # concurrently renamed/removed
-                newest = max(newest, t)
-        age = now - newest
+        quiet = now - max((t for t in mtimes if t <= now),
+                          default=top.st_ctime)
         pid = d.rsplit(".", 1)[-1]
         pid_dead = not (pid.isdigit() and os.path.exists(f"/proc/{pid}"))
-        if (pid_dead and age > _SWEEP_DEAD_PID_AGE_S) or age > _SWEEP_ANY_AGE_S:
+        if ((pid_dead and quiet > _SWEEP_DEAD_PID_AGE_S)
+                or now - top.st_ctime > _SWEEP_ANY_AGE_S):
             shutil.rmtree(d, ignore_errors=True)
 
 

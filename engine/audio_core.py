@@ -425,25 +425,15 @@ def analyze(payload: bytes | None, sr_hz: int | None,
             _frame_features_pcm(pcm, x, sr_hz))
 
 
-def features(payload: bytes | None, sr_hz: int | None):
-    """-> (decoded_dur_ms, n_samples, rms, clipping_ratio, pcm_checksum).
-
-    All None when the payload is missing/undecodable or sr is unusable.
+def _features_pcm(pcm: np.ndarray, x: np.ndarray, sr_hz: int | None):
+    """-> (decoded_dur_ms, n_samples, rms, clipping_ratio, pcm_checksum);
+    dur is None when sr is unusable.
 
     Memory-traffic-aware: this runs once per clip over the whole corpus, so
     every avoidable full-payload copy matters (float32 accumulation instead
-    of float64, boolean compare instead of abs+astype, hash over a
-    memoryview of the payload instead of a re-serialized sample copy).
-    blake2b-128 replaces md5: ~1.5x faster, and 128 bits keeps the
-    exact-dup equality classes collision-free at 10^12 rows.
-    """
-    pcm = decode_pcm_s16le(payload)
-    if pcm is None or pcm.size == 0:
-        return None, None, None, None, None
-    return _features_pcm(pcm, pcm.astype(np.float32), sr_hz)
-
-
-def _features_pcm(pcm: np.ndarray, x: np.ndarray, sr_hz: int | None):
+    of float64, boolean compare instead of abs+astype).  blake2b-128
+    replaces md5: ~1.5x faster, and 128 bits keeps the exact-dup equality
+    classes collision-free at 10^12 rows."""
     n = int(pcm.size)
     # einsum, not np.dot: the per-clip reductions here are too small for
     # BLAS threading to pay off, and interleaved with the fft/hash work
@@ -500,10 +490,10 @@ def _mel_filterbank(sr: int, n_fft: int, n_mels: int = N_MELS) -> np.ndarray:
     return fb
 
 
-def frame_features(payload: bytes | None, sr_hz: int | None):
+def _frame_features_pcm(pcm: np.ndarray, x: np.ndarray, sr_hz: int | None):
     """-> (silence_ratio, spectral_flatness, mel_profile).
 
-    Frame-level analysis of the decoded payload — the audio graft of the
+    Frame-level analysis of the decoded samples — the audio graft of the
     reference's stay-point/stationary-episode detection (a trajectory that
     doesn't move ~ a clip that carries no signal energy,
     Step4-Spatial-Inconsistency.R:5-49 adjacent-distance scan):
@@ -517,17 +507,9 @@ def frame_features(payload: bytes | None, sr_hz: int | None):
         feature-extraction output a downstream audio-similarity or
         train-data pipeline consumes.
 
-    All None when the payload is undecodable or shorter than one frame.
-    Frame geometry uses FALLBACK_SR when sr_hz is not usable, so the
-    features stay defined for rows whose SR_INVALID rule fires first.
-    """
-    pcm = decode_pcm_s16le(payload)
-    if pcm is None or pcm.size == 0:
-        return None, None, None
-    return _frame_features_pcm(pcm, pcm.astype(np.float32), sr_hz)
-
-
-def _frame_features_pcm(pcm: np.ndarray, x: np.ndarray, sr_hz: int | None):
+    All None when the clip is shorter than one frame.  Frame geometry
+    uses FALLBACK_SR when sr_hz is not usable, so the features stay
+    defined for rows whose SR_INVALID rule fires first."""
     sr = int(sr_hz) if sr_hz is not None and sr_hz >= 1000 else FALLBACK_SR
     flen = (sr * FRAME_MS) // 1000
     hop = (sr * HOP_MS) // 1000
@@ -588,17 +570,3 @@ def resample_linear(pcm: np.ndarray, sr_from: int, sr_to: int) -> np.ndarray:
     pos = np.arange(n_out, dtype=np.float64) * (pcm.size - 1) / max(n_out - 1, 1)
     out = np.interp(pos, np.arange(pcm.size), pcm.astype(np.float32))
     return np.clip(np.rint(out), -32768, 32767).astype("<i2")
-
-
-def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:
-    """SNR of decoded (int16-normalized) vs the float reference signal."""
-    ref = np.asarray(reference, dtype=np.float64)
-    dec = np.asarray(decoded, dtype=np.float64) / INT16_FULL_SCALE
-    m = min(ref.size, dec.size)
-    ref, dec = ref[:m], dec[:m]
-    noise = ref - dec
-    p_sig = float(np.mean(ref * ref))
-    p_noise = float(np.mean(noise * noise))
-    if p_noise == 0.0:
-        return float("inf")
-    return 10.0 * np.log10(p_sig / p_noise)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import config
-from .operators import decision, dedup, heuristics, scoring
+from .operators import decision, pipeline, scoring
 
 STATE_SCHEMA = T.StructType([
     T.StructField("part_id", T.IntegerType(), False),
@@ -93,9 +93,7 @@ def run_checkpointed(spark: SparkSession, clips: DataFrame, output_path: str,
         .withColumn("part_id", F.col("part_id").cast("int"))
     # repair is fused into the Stage-A scoring UDF (scored rows already
     # carry the repaired transcript + `repaired`), so Stage B is all-native
-    flagged = heuristics.with_model_flags(heuristics.with_heuristic_flags(scored_all))
-    decided = decision.with_decision(dedup.with_dup_flags(flagged))
-    labels = decision.to_labels(decided)
+    labels = pipeline.label(scored_all)
     (labels.repartition("part_id")
      .write.mode("overwrite").partitionBy("part_id")
      .parquet(f"{output_path}/labels"))

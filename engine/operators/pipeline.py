@@ -8,6 +8,10 @@ and the band self-join inside dedup, (b) the lineage aggregation.  The
 reference needed six mutating passes with CSV materialization between them
 (PostProcessing-Pipeline.R:20-44); Catalyst fuses our scan + UDF + flag
 projection into a single stage.
+
+`label` is the one post-scoring composition: the in-memory pass, the
+checkpointed job (lineage.run_checkpointed) and the streaming ingest all
+label through it.
 """
 
 from __future__ import annotations
@@ -30,32 +34,34 @@ def read_clips(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def run_pipeline(clips: DataFrame, persist: bool = True) -> DataFrame:
-    """clips (schema.CLIPS_SCHEMA) -> labels (schema.LABELS_SCHEMA order).
+def label(scored: DataFrame) -> DataFrame:
+    """scored (scoring.score_clips output) -> labels (schema.LABELS_SCHEMA
+    order): heuristic flags -> model flags -> dup flags -> decision.
 
-    `persist` pins the scored table (which no longer carries `bytes`, so it
-    is ~100 bytes/row): the dedup stage references it from three plan
-    branches (main + both sides of the band self-join), and without a
-    materialization Spark re-executes the expensive Python UDF subtree once
-    per branch.  The checkpointed job gets the same effect from the stage-A
-    parquet materialization instead (lineage.run_checkpointed)."""
-    scored = scoring.score_clips(clips)
-    if persist:
-        # eager: parallel dedup branches of one action would otherwise race
-        # on the unfilled cache and re-execute the UDF subtree per branch
-        scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
-        scored.count()
-    # repair-then-rescore already happened INSIDE the scoring UDF
-    # (repair.repair_batch, fused into scoring._score_batch): `transcript`
-    # is the final (possibly normalized) text and `repaired` its lineage,
-    # so heuristic flags, model flags, and dup grouping all see the
-    # repaired values with no extra stage
+    Repair-then-rescore already happened INSIDE the scoring UDF
+    (repair.repair_batch, fused into scoring._score_batch): `transcript`
+    is the final (possibly normalized) text and `repaired` its lineage,
+    so heuristic flags, model flags, and dup grouping all see the
+    repaired values with no extra stage."""
     flagged = heuristics.with_model_flags(heuristics.with_heuristic_flags(scored))
-    with_dups = dedup.with_dup_flags(flagged)
-    decided = decision.with_decision(with_dups)
+    decided = decision.with_decision(dedup.with_dup_flags(flagged))
     return decision.to_labels(decided)
 
 
-def run_pipeline_with_metrics(clips: DataFrame) -> tuple[DataFrame, DataFrame]:
-    labels = run_pipeline(clips)
-    return labels, decision.lineage_metrics(labels)
+def persist_scored(clips: DataFrame) -> DataFrame:
+    """Score and pin the scored table (which no longer carries `bytes`, so
+    it is ~100 bytes/row): the dedup stage references it from three plan
+    branches (main + both sides of the band self-join), and without a
+    materialization Spark re-executes the expensive Python UDF subtree once
+    per branch.  Eager: parallel dedup branches of one action would
+    otherwise race on the unfilled cache.  The checkpointed job gets the
+    same effect from the stage-A parquet materialization instead."""
+    scored = scoring.score_clips(clips).persist(StorageLevel.MEMORY_AND_DISK)
+    scored.count()
+    return scored
+
+
+def run_pipeline(clips: DataFrame) -> DataFrame:
+    """clips (schema.CLIPS_SCHEMA) -> labels (schema.LABELS_SCHEMA order),
+    over a persisted scored table (see persist_scored)."""
+    return label(persist_scored(clips))

@@ -33,37 +33,23 @@ Python `str.isalpha()` and the heuristics' Java `\\p{L}` both match
 Unicode categories Lu/Ll/Lt/Lm/Lo, so the candidate predicate here and
 the flag recompute there agree.
 
-Whitespace class is ASCII-EXPLICIT in both engines and the oracle: Java's
-\\s and Python's re \\s disagree on unicode spaces, so the normalization
-regex never uses bare \\s.
+Whitespace class is ASCII-EXPLICIT here and in the oracle: Python's re
+\\s also matches unicode spaces (and Java's does not), so the
+normalization regex never uses bare \\s.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from .. import config
-
-CTRL_CLASS = "[\\x00-\\x1F\\x7F]"
-WS_RUN = "[ \\t\\n\\x0B\\f\\r]+"
 
 _CTRL_RE = re.compile("[\x00-\x1f\x7f]")
 _WS_RE = re.compile("[ \t\n\x0b\f\r]+")
 
 
-def normalize_col(t: Column) -> Column:
-    """control chars -> space, collapse ASCII whitespace runs, trim.
-    (Column form, used by the demo/oracle queries; semantics identical to
-    `normalize_text` below.)"""
-    return F.trim(F.regexp_replace(
-        F.regexp_replace(t, CTRL_CLASS, " "), WS_RUN, " "))
-
-
 def normalize_text(t: str) -> str:
-    """Python form of `normalize_col` — same three steps, ASCII classes."""
+    """control chars -> space, collapse ASCII whitespace runs, trim."""
     return _WS_RE.sub(" ", _CTRL_RE.sub(" ", t)).strip(" ")
 
 

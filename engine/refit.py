@@ -13,12 +13,13 @@ Method, chosen for scale AND determinism:
   1. One distributed aggregation builds a fixed-width histogram per score
      column (the only pass over the data — works identically at 10^12
      rows; bin counts are exact, order-independent sums).
-  2. Exact 1-D 2-means on the histogram bins (driver-side, O(n_bins) with
-     prefix sums): the boundary between the two clusters is the candidate
-     threshold.  For one-dimensional cutoffs this dominates pyspark.ml
-     KMeans: no sampled init, no partitioning-dependent seeds — the same
-     corpus always yields the same proposal (unit-tested), while the
-     reference's gamlssMX/kmeans fits are seed-lottery affairs.
+  2. Exact 1-D 2-means on the histogram bins (driver-side dynamic
+     programming over prefix sums): the boundary between the two clusters
+     is the candidate threshold.  For one-dimensional cutoffs this
+     dominates pyspark.ml KMeans: no sampled init, no partitioning-
+     dependent seeds — the same corpus always yields the same proposal
+     (unit-tested), while the reference's gamlssMX/kmeans fits are
+     seed-lottery affairs.
   3. Exact distribution percentiles ride along as guardrail context in
      the emitted proposal.
 
@@ -53,35 +54,6 @@ def score_histogram(df: DataFrame, col: str, lo: float, hi: float,
         counts[r["bin"]] = r["n"]
     centers = lo + (np.arange(n_bins) + 0.5) * width
     return centers, counts
-
-
-def kmeans2_boundary(centers: np.ndarray, counts: np.ndarray) -> float:
-    """Exact weighted 1-D 2-means over histogram bins: evaluate every
-    split point via prefix sums, take the SSE-minimizing one; boundary =
-    midpoint of the two cluster means (deterministic, no init lottery)."""
-    w = counts.astype(np.float64)
-    x = centers.astype(np.float64)
-    cw = np.cumsum(w)
-    cwx = np.cumsum(w * x)
-    cwx2 = np.cumsum(w * x * x)
-    total_w, total_wx, total_wx2 = cw[-1], cwx[-1], cwx2[-1]
-    if total_w == 0:
-        return float(x[len(x) // 2])
-    best_sse, best_i = np.inf, None
-    for i in range(len(x) - 1):
-        wl, wr = cw[i], total_w - cw[i]
-        if wl == 0 or wr == 0:
-            continue
-        # SSE = sum(w x^2) - (sum(w x))^2 / sum(w), per side
-        sse = (cwx2[i] - cwx[i] ** 2 / wl) \
-            + ((total_wx2 - cwx2[i]) - (total_wx - cwx[i]) ** 2 / wr)
-        if sse < best_sse - 1e-12:
-            best_sse, best_i = sse, i
-    if best_i is None:
-        return float(x[len(x) // 2])
-    mean_l = cwx[best_i] / cw[best_i]
-    mean_r = (total_wx - cwx[best_i]) / (total_w - cw[best_i])
-    return float((mean_l + mean_r) / 2.0)
 
 
 # Exact `percentile` buffers every value per partition — fine for a test
@@ -156,25 +128,18 @@ def _kmeans_dp(centers: np.ndarray, counts: np.ndarray,
     return wss, back
 
 
-def optimal_1d_kmeans_wss(centers: np.ndarray, counts: np.ndarray,
-                          k: int) -> float:
-    """EXACT weighted k-means SSE at one k (see _kmeans_dp)."""
-    return _kmeans_dp(centers, counts, k)[0][k - 1]
-
-
 def _boundaries_from_back(centers: np.ndarray, counts: np.ndarray,
                           back: np.ndarray, k: int) -> list[float]:
     """Backtrack a k-segmentation from a DP `back` table built with
     k_max >= k (back[t] is the t+2-cluster layer, valid for any smaller
     k) and convert it to k-1 boundaries = midpoints of adjacent cluster
-    means."""
+    means.  With fewer than 2 occupied bins (an all-null or constant score
+    column) no split separates anything, and every boundary is the middle
+    bin center."""
     w = counts.astype(np.float64)
     x = centers.astype(np.float64)
     n = len(x)
-    if w.sum() == 0:
-        # zero-weight histogram: every segmentation is vacuous — mirror
-        # kmeans2_boundary's degenerate convention (the middle bin center)
-        # so the k=2 equality invariant holds on ALL inputs
+    if np.count_nonzero(w) < 2:
         return [float(x[n // 2])] * (k - 1)
     splits = []
     j = n
@@ -196,9 +161,8 @@ def _boundaries_from_back(centers: np.ndarray, counts: np.ndarray,
 def kmeans_boundaries(centers: np.ndarray, counts: np.ndarray,
                       k: int) -> list[float]:
     """EXACT 1-D k-means segmentation -> k-1 boundary values, each the
-    midpoint of the means of two adjacent clusters (the same convention
-    kmeans2_boundary uses at k=2, INCLUDING its zero-weight degenerate
-    fallback).  Deterministic: ties in the DP argmin resolve to the
+    midpoint of the means of two adjacent clusters; k=2 gives the refit's
+    single threshold.  Deterministic: ties in the DP argmin resolve to the
     leftmost split.  This is the multi-component analog of the
     reference's 5-7-component strata derivation (mixture fit ->
     component boundaries, Step3-Temporal-Inconsistency.R:150-355) with the
@@ -219,18 +183,6 @@ def _elbow_from_wss(wss: list[float]) -> int:
     return len(wss)
 
 
-def cluster_diagnostics(centers: np.ndarray, counts: np.ndarray,
-                        k_max: int = 6) -> dict:
-    """Cluster-count diagnostics — deterministic analog of the reference's
-    wss-scan + clusGap model selection (get_nbclust/clusGap,
-    Step2-Data-Incompleteness.R:223-224, Step3:377-379): exact WSS per k
-    from the DP above, elbow per _elbow_from_wss."""
-    wss = _kmeans_dp(centers, counts, k_max)[0]
-    return {"k": list(range(1, k_max + 1)),
-            "wss": [round(v, 6) for v in wss],
-            "elbow_k": _elbow_from_wss(wss)}
-
-
 def propose_strata(centers: np.ndarray, counts: np.ndarray,
                    k_max: int = 8) -> dict:
     """Data-driven MULTI-COMPONENT strata proposal (the reference's M1
@@ -246,12 +198,16 @@ def propose_strata(centers: np.ndarray, counts: np.ndarray,
     k_max-long scan could never elect k_max (a 6-modal corpus at k_max=6
     previously collapsed to a 2-band proposal).  The default k_max=8
     covers the reference's observed 5-7-component range with headroom.
-    ONE DP pass serves both the diagnostics and the backtrack."""
+    k never exceeds the number of occupied bins, so the boundaries
+    strictly increase.  ONE DP pass serves both the diagnostics (the
+    deterministic analog of the reference's wss-scan + clusGap model
+    selection, Step2-Data-Incompleteness.R:223-224, Step3:377-379) and
+    the backtrack."""
     wss, back = _kmeans_dp(centers, counts, k_max + 1)
     diag = {"k": list(range(1, k_max + 2)),
             "wss": [round(v, 6) for v in wss],
             "elbow_k": _elbow_from_wss(wss)}
-    k = min(diag["elbow_k"], k_max)
+    k = max(1, min(diag["elbow_k"], k_max, int(np.count_nonzero(counts))))
     bounds = _boundaries_from_back(centers, counts, back, k)
     return {
         "k": k,
@@ -296,19 +252,19 @@ def refit_thresholds(scored: DataFrame) -> dict:
     # the top bin and anchors the high cluster
     ppl_hi = float(config.PPL_MAX * 4)
     c, n = score_histogram(scored, "ppl_score", 0.0, ppl_hi)
-    ppl_cut = kmeans2_boundary(c, n)
+    ppl_cut = kmeans_boundaries(c, n, 2)[0]
     ppl_strata = propose_strata(c, n)
     ppl_diag = ppl_strata["diagnostics"]
     ppl_pcts = _percentiles(scored, "ppl_score", [0.5, 0.9, 0.99], n_rows)
 
     c, n = score_histogram(scored, "lid_margin", 0.0, 4.0)
-    lid_cut = kmeans2_boundary(c, n)
+    lid_cut = kmeans_boundaries(c, n, 2)[0]
     lid_strata = propose_strata(c, n)
     lid_diag = lid_strata["diagnostics"]
     lid_pcts = _percentiles(scored, "lid_margin", [0.01, 0.1, 0.5], n_rows)
 
     c, n = score_histogram(scored, "silence_ratio", 0.0, 1.0)
-    sil_cut = kmeans2_boundary(c, n)
+    sil_cut = kmeans_boundaries(c, n, 2)[0]
 
     return {
         "method": "fixed-width histogram (1 distributed agg/score) + "

@@ -4,7 +4,7 @@ Ship (north_rule):
     cd <repo> && zip -qr /tmp/engine.zip engine
     spark-submit --master 'local[32]' --py-files /tmp/engine.zip \
         jobs/run_pipeline.py --input /path/clips --output /path/out \
-        [--wave-size 16] [--no-resume] [--no-checkpoint]
+        [--wave-size 16] [--no-resume]
 
 Output layout:
     out/scored/part_id=*/    per-partition checkpoint of the heavy stage
@@ -37,14 +37,11 @@ def main() -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--wave-size", type=int, default=16)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--no-checkpoint", action="store_true",
-                    help="single fused in-memory pass, labels only")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
     from engine import config, lineage, sources
-    from engine.operators import pipeline
 
     spark = (SparkSession.builder.appName("clip-quality-pipeline")
              .config("spark.sql.adaptive.enabled", "true")
@@ -56,18 +53,9 @@ def main() -> int:
 
     t0 = time.time()
     clips = sources.read_clips_table(spark, args.input)
-    if args.no_checkpoint:
-        labels, metrics = pipeline.run_pipeline_with_metrics(clips)
-        (labels.repartition("part_id").write.mode("overwrite")
-         .partitionBy("part_id").parquet(f"{args.output}/labels"))
-        metrics.coalesce(1).write.mode("overwrite") \
-            .parquet(f"{args.output}/lineage")
-        labels = spark.read.parquet(f"{args.output}/labels")
-        metrics = spark.read.parquet(f"{args.output}/lineage")
-    else:
-        labels, metrics = lineage.run_checkpointed(
-            spark, clips, args.output,
-            wave_size=args.wave_size, resume=not args.no_resume)
+    labels, metrics = lineage.run_checkpointed(
+        spark, clips, args.output,
+        wave_size=args.wave_size, resume=not args.no_resume)
 
     n_total = labels.count()
     summary = metrics.groupBy().agg(

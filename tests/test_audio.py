@@ -13,6 +13,32 @@ def _tone(sr: int, dur_s: float, f: float, amp: float) -> np.ndarray:
     return (amp * np.sin(2 * np.pi * f * t)).astype(np.float64)
 
 
+def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:
+    """SNR of decoded (int16-normalized) vs the float reference signal."""
+    ref = np.asarray(reference, dtype=np.float64)
+    dec = np.asarray(decoded, dtype=np.float64) / audio_core.INT16_FULL_SCALE
+    m = min(ref.size, dec.size)
+    ref, dec = ref[:m], dec[:m]
+    noise = ref - dec
+    p_sig = float(np.mean(ref * ref))
+    p_noise = float(np.mean(noise * noise))
+    if p_noise == 0.0:
+        return float("inf")
+    return 10.0 * np.log10(p_sig / p_noise)
+
+
+def _features(payload, sr):
+    """Clip-level features of a pcm_s16le payload, as the scoring UDF
+    computes them."""
+    return audio_core.analyze(payload, sr, "pcm_s16le")[1]
+
+
+def _frame_features(payload, sr):
+    """Frame-level features of a pcm_s16le payload, as the scoring UDF
+    computes them."""
+    return audio_core.analyze(payload, sr, "pcm_s16le")[2]
+
+
 def test_decode_roundtrip_snr():
     """int16 quantization of a synthetic signal must exceed 30 dB SNR."""
     sr = 16000
@@ -20,14 +46,14 @@ def test_decode_roundtrip_snr():
     payload = (ref * 32767.0).astype("<i2").tobytes()
     decoded = audio_core.decode_pcm_s16le(payload)
     assert decoded is not None and decoded.size == sr
-    assert audio_core.snr_db(ref, decoded) >= 30.0
+    assert snr_db(ref, decoded) >= 30.0
 
 
 def test_features_values():
     sr = 8000
     ref = _tone(sr, 2.0, 200.0, 0.25)
     payload = (ref * 32767.0).astype("<i2").tobytes()
-    dur, n, rms, clip_ratio, checksum = audio_core.features(payload, sr)
+    dur, n, rms, clip_ratio, checksum = _features(payload, sr)
     assert dur == 2000 and n == sr * 2
     assert abs(rms - 0.25 / np.sqrt(2)) < 1e-3
     assert clip_ratio == 0.0
@@ -38,7 +64,7 @@ def test_features_clipping_detected():
     sr = 8000
     ref = np.ones(sr) * 0.9999
     payload = (ref * 32767.0).astype("<i2").tobytes()
-    _, _, _, clip_ratio, _ = audio_core.features(payload, sr)
+    _, _, _, clip_ratio, _ = _features(payload, sr)
     assert clip_ratio > 0.99
 
 
@@ -46,12 +72,12 @@ def test_features_clipping_detected():
     (None, 16000), (b"", 16000), (b"\x01", 16000),
 ])
 def test_features_degenerate_payload(payload, sr):
-    assert audio_core.features(payload, sr) == (None, None, None, None, None)
+    assert _features(payload, sr) == (None, None, None, None, None)
 
 
 def test_features_bad_sr():
     payload = (np.zeros(100)).astype("<i2").tobytes()
-    dur, n, rms, cr, ck = audio_core.features(payload, 0)
+    dur, n, rms, cr, ck = _features(payload, 0)
     assert dur is None and n == 100 and ck is not None
 
 
@@ -215,13 +241,13 @@ def test_frame_features_tone_vs_silence():
     sr = 16000
     ref = _tone(sr, 1.0, 440.0, 0.3)
     payload = (ref * 32767.0).astype("<i2").tobytes()
-    sil, flat, mel = audio_core.frame_features(payload, sr)
+    sil, flat, mel = _frame_features(payload, sr)
     assert sil == 0.0                      # a 0.3-amplitude tone is never silent
     assert flat is not None and flat < 0.5  # tonal -> low flatness
     assert isinstance(mel, list) and len(mel) == audio_core.N_MELS
 
     quiet = np.zeros(sr, dtype="<i2").tobytes()
-    sil2, flat2, mel2 = audio_core.frame_features(quiet, sr)
+    sil2, flat2, mel2 = _frame_features(quiet, sr)
     assert sil2 == 1.0
     assert len(mel2) == audio_core.N_MELS
 
@@ -231,16 +257,16 @@ def test_frame_features_partial_silence():
     sig = np.zeros(sr, dtype=np.float32)
     sig[: sr // 10] = _tone(sr, 0.1, 300.0, 0.5)  # first 10% loud
     payload = (sig * 32767.0).astype("<i2").tobytes()
-    sil, _, _ = audio_core.frame_features(payload, sr)
+    sil, _, _ = _frame_features(payload, sr)
     assert 0.7 < sil < 0.95
 
 
 def test_frame_features_degenerate():
-    assert audio_core.frame_features(None, 16000) == (None, None, None)
-    assert audio_core.frame_features(b"\x00\x01", 16000) == (None, None, None)
+    assert _frame_features(None, 16000) == (None, None, None)
+    assert _frame_features(b"\x00\x01", 16000) == (None, None, None)
     # invalid sr falls back to FALLBACK_SR geometry, still defined
     payload = np.zeros(16000, dtype="<i2").tobytes()
-    sil, flat, mel = audio_core.frame_features(payload, -1)
+    sil, flat, mel = _frame_features(payload, -1)
     assert sil == 1.0 and len(mel) == audio_core.N_MELS
 
 
@@ -255,7 +281,7 @@ def test_resample_preserves_tone():
     down = audio_core.resample_linear(up, 16000, sr)
     assert abs(down.size - sr) <= 2
     m = min(ref.size, down.size)
-    assert audio_core.snr_db(ref[:m], down[:m]) >= 25.0
+    assert snr_db(ref[:m], down[:m]) >= 25.0
     rms_in = np.sqrt(np.mean(pcm.astype(np.float64) ** 2))
     rms_out = np.sqrt(np.mean(down.astype(np.float64) ** 2))
     assert abs(rms_out - rms_in) / rms_in < 0.02
@@ -366,7 +392,7 @@ def test_g711_roundtrip_snr_and_idempotence(law):
     assert len(payload) == pcm.size  # 1 byte/sample: true 2:1 compression
     dec = audio_core.decode_payload(payload, law)
     assert dec is not None and dec.dtype == np.int16
-    snr = audio_core.snr_db(pcm.astype(np.float64) / 32768.0, dec)
+    snr = snr_db(pcm.astype(np.float64) / 32768.0, dec)
     assert snr >= 30.0, snr
     payload2 = audio_core.encode_g711(dec, law)
     dec2 = audio_core.decode_payload(payload2, law)
@@ -466,7 +492,7 @@ def test_adpcm_roundtrip_snr_and_compression():
     assert len(payload) == pcm.size // 2  # 4 bits/sample
     dec = audio_core.decode_payload(payload, "adpcm_ima")
     assert dec is not None and dec.dtype == np.int16 and dec.size == pcm.size
-    snr = audio_core.snr_db(pcm.astype(np.float64) / 32768.0, dec)
+    snr = snr_db(pcm.astype(np.float64) / 32768.0, dec)
     assert snr >= 20.0, snr
 
 

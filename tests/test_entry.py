@@ -249,7 +249,7 @@ def test_materialize_cleans_up_on_writer_failure(tmp_path):
     assert os.path.exists(f"{target}/_SUCCESS")
 
 
-def test_materialize_sweeps_aged_orphans(tmp_path):
+def test_materialize_sweeps_aged_orphans(tmp_path, monkeypatch):
     """Orphan tmp/stale dirs from crashed runs are swept when their pid is
     dead AND the dir has been quiet past the grace age, or unconditionally
     after the 24 h catch-all (pid reuse).  Fresh dead-pid dirs survive
@@ -293,12 +293,36 @@ def test_materialize_sweeps_aged_orphans(tmp_path):
     assert os.path.exists(dead_fresh)  # inside the dead-pid grace window
     assert os.path.exists(deep_live)  # fresh nested write keeps it alive
 
-    # 24 h catch-all: even a pid that looks ALIVE (reuse) is reclaimed
-    os.utime(live_ancient, (now - 25 * 3600, now - 25 * 3600))
+    # 24 h catch-all: even a pid that looks ALIVE (reuse) is reclaimed;
+    # it ages by the dir's ctime, so the clock moves, not the mtime
+    monkeypatch.setattr(time, "time", lambda: now + 25 * 3600)
     # sweep must also fire on the skip-if-fresh (already-complete) path
     assert entrymod._materialize(target, write_ok) == target
     assert not os.path.exists(live_ancient)
     assert os.path.exists(f"{target}/_SUCCESS")
+
+
+def test_sweep_ignores_future_mtimes(tmp_path, monkeypatch):
+    """Regression: quietness was the newest mtime in the tree, so one file
+    dated ahead of the clock gave a negative age and made the orphan
+    immortal under both rules.  Future mtimes are now ignored by the
+    quiet rule, and the 24 h catch-all reads the top-level dir's ctime,
+    which utime cannot move."""
+    import os
+    import time
+
+    target = str(tmp_path / "mat_future")
+    later = time.time() + 25 * 3600
+    for d in (f"{target}.tmp.999999999",  # dead pid: the 5-minute rule
+              f"{target}.tmp.1"):         # live pid: the 24 h catch-all
+        os.makedirs(d)
+        f = os.path.join(d, "part-00000")
+        open(f, "w").write("x")
+        os.utime(f, (later + 24 * 3600, later + 24 * 3600))
+    monkeypatch.setattr(time, "time", lambda: later)
+    entrymod._sweep_orphans(target)
+    assert not os.path.exists(f"{target}.tmp.999999999")
+    assert not os.path.exists(f"{target}.tmp.1")
 
 
 def test_materialize_concurrent_publishers_one_winner(tmp_path):

@@ -14,16 +14,53 @@ def test_kmeans2_boundary_separates_two_modes():
     counts = np.zeros(100, dtype=np.int64)
     counts[10:20] = 50   # mode ~1.0-2.0
     counts[80:90] = 30   # mode ~8.0-9.0
-    b = refit.kmeans2_boundary(centers, counts)
+    [b] = refit.kmeans_boundaries(centers, counts, 2)
     assert 2.0 < b < 8.0
 
 
 def test_kmeans2_boundary_degenerate():
     c = np.linspace(0, 1, 8)
-    assert refit.kmeans2_boundary(c, np.zeros(8, dtype=np.int64)) is not None
+    assert refit.kmeans_boundaries(c, np.zeros(8, dtype=np.int64), 2) \
+        == [float(c[4])]
     one = np.zeros(8, dtype=np.int64)
     one[3] = 5
-    assert 0.0 <= refit.kmeans2_boundary(c, one) <= 1.0
+    assert refit.kmeans_boundaries(c, one, 2) == [float(c[4])]
+
+
+def test_kmeans_boundaries_single_occupied_bin_is_middle_center():
+    """Regression: with all weight in one bin the DP elected an empty
+    first cluster, so the k=2 boundary was the midpoint of bin 0 and the
+    occupied bin (0.714 here) and k=4 gave [0.0, 0.0, 0.714].  Fewer than
+    2 occupied bins now puts every boundary at the middle bin center."""
+    x = np.linspace(0, 10, 8)
+    w = np.zeros(8, dtype=np.int64)
+    w[0] = 7
+    assert refit.kmeans_boundaries(x, w, 2) == [float(x[4])]
+    assert refit.kmeans_boundaries(x, w, 4) == [float(x[4])] * 3
+
+
+def test_propose_strata_k_clamped_to_occupied_bins():
+    """Regression: a constant score column (one occupied bin) made the
+    flat elbow elect k=2 and propose a boundary that separates nothing.
+    k never exceeds the occupied-bin count, so boundaries strictly
+    increase on every histogram."""
+    x = np.linspace(0, 10, 8)
+    for occupied in ([], [0], [7]):
+        w = np.zeros(8, dtype=np.int64)
+        w[occupied] = 9
+        p = refit.propose_strata(x, w, k_max=4)
+        assert p["k"] == 1 and p["boundaries"] == [], (occupied, p)
+    rng = np.random.default_rng(7)
+    for n_bins in (8, 64, 512):
+        for _ in range(20):
+            w = np.zeros(n_bins, dtype=np.int64)
+            n_occ = int(rng.integers(0, 5))
+            w[rng.choice(n_bins, n_occ, replace=False)] = \
+                rng.integers(1, 100, n_occ)
+            p = refit.propose_strata(np.arange(n_bins) + 0.5, w)
+            b = p["boundaries"]
+            assert p["k"] <= max(1, n_occ) and len(b) == p["k"] - 1
+            assert all(lo < hi for lo, hi in zip(b, b[1:])), (w.nonzero(), p)
 
 
 def test_refit_is_deterministic_and_in_window(spark, clips_t1):
@@ -112,11 +149,12 @@ def test_optimal_1d_kmeans_wss_exact_small():
     best2 = min(sse(range(0, i)) + sse(range(i, n)) for i in range(1, n))
     best3 = min(sse(range(0, i)) + sse(range(i, j)) + sse(range(j, n))
                 for i, j in itertools.combinations(range(1, n), 2))
-    assert abs(refit.optimal_1d_kmeans_wss(x, w, 2) - best2) < 1e-9
-    assert abs(refit.optimal_1d_kmeans_wss(x, w, 3) - best3) < 1e-9
+    # the refit JSON's diagnostics: wss[k-1] for k = 1..k_max+1, 6 dp
+    wss = refit.propose_strata(x, w, k_max=3)["diagnostics"]["wss"]
+    assert abs(wss[1] - best2) < 1e-6
+    assert abs(wss[2] - best3) < 1e-6
     # monotone non-increasing in k
-    wss = [refit.optimal_1d_kmeans_wss(x, w, k) for k in range(1, 5)]
-    assert all(a >= b - 1e-12 for a, b in zip(wss, wss[1:]))
+    assert all(a >= b for a, b in zip(wss, wss[1:]))
 
 
 def test_cluster_diagnostics_elbow_finds_true_k():
@@ -134,8 +172,8 @@ def test_cluster_diagnostics_elbow_finds_true_k():
         counts += (1000 * np.exp(-((centers - mode) ** 2)
                                  / (2 * spread ** 2))).astype(np.int64)
         del idx
-    d1 = refit.cluster_diagnostics(centers, counts, k_max=6)
-    d2 = refit.cluster_diagnostics(centers, counts, k_max=6)
+    d1 = refit.propose_strata(centers, counts, k_max=6)["diagnostics"]
+    d2 = refit.propose_strata(centers, counts, k_max=6)["diagnostics"]
     assert d1 == d2  # deterministic
     assert d1["elbow_k"] == 3
     assert d1["wss"][2] < 0.1 * d1["wss"][0]  # k=3 explains the structure
@@ -173,17 +211,17 @@ def _modal_histogram(modes, spread=4, n=200, hi=100):
 
 
 def test_kmeans_boundaries_exact_and_consistent():
-    """DP-backtracked boundaries: at k=2 they must equal kmeans2_boundary
-    exactly (same midpoint-of-means convention over the same optimal
-    split), and at k=3 on a tiny histogram they must separate the three
-    brute-force-optimal segments."""
+    """DP-backtracked boundaries: at k=2 the midpoint of the two
+    brute-force-optimal segment means, and at k=3 on a tiny histogram
+    they must separate the three brute-force-optimal segments."""
     import numpy as np
 
     from engine import refit
 
     x = np.array([0.0, 1.0, 2.0, 10.0, 11.0, 20.0])
     w = np.array([2, 1, 1, 3, 1, 2], dtype=np.int64)
-    assert refit.kmeans_boundaries(x, w, 2) == [refit.kmeans2_boundary(x, w)]
+    # optimal 2-segmentation is {0,1,2} | {10,11,20}: means 0.75, 13.5
+    assert np.allclose(refit.kmeans_boundaries(x, w, 2), [(0.75 + 13.5) / 2])
     b3 = refit.kmeans_boundaries(x, w, 3)
     # optimal 3-segmentation is {0,1,2} | {10,11} | {20}: boundaries are
     # midpoints of adjacent weighted segment means (0.75, 10.25, 20.0)
@@ -237,14 +275,13 @@ def test_propose_strata_can_elect_k_max():
 
 def test_kmeans_boundaries_degenerate_matches_kmeans2():
     """Review regression: on a zero-weight histogram (score column
-    entirely null) kmeans_boundaries must keep its documented k=2
-    equality with kmeans2_boundary — both fall back to the middle bin
-    center."""
+    entirely null) every boundary falls back to the middle bin center,
+    the convention of the original single-threshold 2-means."""
     import numpy as np
 
     from engine import refit
 
     x = np.linspace(0, 10, 8)
     w = np.zeros(8, dtype=np.int64)
-    assert refit.kmeans_boundaries(x, w, 2) == [refit.kmeans2_boundary(x, w)]
+    assert refit.kmeans_boundaries(x, w, 2) == [float(x[4])]
     assert refit.kmeans_boundaries(x, w, 4) == [float(x[4])] * 3

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from engine import config, lineage
+from engine import config, lineage, schema
 from engine.operators import pipeline, scoring
 
 
@@ -39,6 +39,15 @@ def test_partial_then_resume_identical(spark, clips_t1, tmp_path):
     a = labels_a.toPandas().sort_values("clip_id").reset_index(drop=True)
     b = labels_b.toPandas().sort_values("clip_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
+
+    # the in-memory fused pass labels exactly as the checkpointed job does
+    cols = schema.LABELS_SCHEMA.fieldNames()
+    fused = pipeline.run_pipeline(clips).toPandas()
+    spark.catalog.clearCache()
+    assert list(fused.columns) == cols
+    fused = fused.sort_values("clip_id").reset_index(drop=True)
+    assert fused["part_id"].dtype == "int32"
+    pd.testing.assert_frame_equal(fused, a[cols], check_exact=True)
 
 
 def test_rule_version_change_invalidates(spark, clips_t1, tmp_path, monkeypatch):

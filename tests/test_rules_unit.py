@@ -4,7 +4,6 @@ the granularity the reference lacks (SURVEY §5.2-2)."""
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from engine import config
@@ -144,13 +143,13 @@ def test_model_flag_dur_mismatch(spark):
     assert f.loc["undec", und] and not f.loc["exact", und]
 
 
-def test_repair_normalize_engine_oracle_parity(spark):
-    """normalize_col (Java regex) and the oracle's _normalize (Python re)
-    must agree byte-for-byte on adversarial inputs: ASCII whitespace and
-    control chars collapse; unicode spaces (NBSP, ideographic space,
-    zero-width) deliberately do NOT (the classes are ASCII-explicit
-    because Java \\s and Python re \\s disagree on unicode).  Also
-    idempotent: normalizing twice changes nothing."""
+def test_repair_normalize_engine_oracle_parity():
+    """repair.normalize_text (the form the scoring UDF runs) and the
+    oracle's _normalize must agree byte-for-byte on adversarial inputs:
+    ASCII whitespace and control chars collapse; unicode spaces (NBSP,
+    ideographic space, zero-width) deliberately do NOT (the classes are
+    ASCII-explicit because Python re \\s also matches unicode spaces).
+    Also idempotent: normalizing twice changes nothing."""
     import numpy as np
 
     from engine.operators import repair
@@ -165,10 +164,8 @@ def test_repair_normalize_engine_oracle_parity(spark):
         n = int(rng.integers(0, 40))
         samples.append("".join(rng.choice(alphabet) for _ in range(n)))
 
-    df = spark.createDataFrame([(s,) for s in samples], "t string")
-    got = [r["n"] for r in
-           df.select(repair.normalize_col(F.col("t")).alias("n")).collect()]
-    for s, g in zip(samples, got):
+    for s in samples:
+        g = repair.normalize_text(s)
         o = oracle._normalize(s)
         assert g == o, repr((s, g, o))
         assert oracle._normalize(o) == o  # idempotence
