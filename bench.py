@@ -5,7 +5,9 @@ Default mode (what the per-round driver runs):
     python bench.py
 runs every `queries()` entry from `__spark_entry__.py` against
 `$SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1) on
-`local[$SPARK_GRAFT_CPUS]` (default 32), plus the fused clips
+`local[$SPARK_GRAFT_CPUS]` (default: the cores this process may run on),
+with a `$SPARK_GRAFT_DRIVER_MEM` heap (default: a quarter of physical
+memory, at most 24g), plus the fused clips
 quality-filter pipeline (the engine's headline workload, BASELINE.json
 north_star) on a cached deterministic synthetic clips table, and prints
 ONE JSON line:
@@ -69,6 +71,14 @@ def _split_bytes(cpus: int, n_clips: int) -> int:
     return max(8 << 20, min(128 << 20, total // (4 * cpus)))
 
 
+def _driver_mem() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM, else a quarter of physical memory capped at
+    24g: the local-mode driver JVM shares the host with one Python worker
+    per core."""
+    quarter_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4 >> 20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(24 << 10, quarter_mb)}m")
+
+
 def _build_spark(cpus: int, n_clips: int = 24000):
     from pyspark.sql import SparkSession
 
@@ -98,7 +108,7 @@ def _build_spark(cpus: int, n_clips: int = 24000):
         # multi-TB table never hits — target ~4 scan splits per core
         .config("spark.sql.files.maxPartitionBytes", str(_split_bytes(cpus, n_clips)))
         .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -120,7 +130,7 @@ def _clips_table(spark, n_clips: int) -> str:
     path = os.path.join(
         tempfile.gettempdir(),
         f"spark_graft_bench_clips_{n_clips}_{BENCH_SEED}"
-        f"_v{fixtures.FIXTURES_VERSION}")
+        f"_v{fixtures.FIXTURES_VERSION}_ids2x")
     done = os.path.join(path, "_GEN_DONE")
     if not os.path.exists(done):
         import pandas as pd
@@ -129,9 +139,11 @@ def _clips_table(spark, n_clips: int) -> str:
             chunks = []
             for start in range(gstart, min(gstart + GROUP, n_clips), CHUNK):
                 n = min(CHUNK, n_clips - start)
+                # a chunk's planted duplicates take ids past its n base
+                # clips (~1.5% more); a 2x id stride keeps chunks disjoint
                 pd_chunk, _ = fixtures.generate_clips(
                     n, seed=BENCH_SEED + start, profile="bench",
-                    start_index=start)
+                    start_index=2 * start)
                 chunks.append(pd_chunk)
             fixtures.write_clips_parquet(
                 spark, pd.concat(chunks, ignore_index=True), path,
@@ -146,11 +158,16 @@ def _force(df) -> None:
 
 
 def _time_clips_pipeline(spark, n_clips: int) -> dict:
+    from pyspark.sql import functions as F
+
     from engine.operators import pipeline
 
     path = _clips_table(spark, n_clips)
     clips = pipeline.read_clips(spark, path)
-    n_rows = clips.count()  # warm file listing/footers outside the timed span
+    # warms file listing/footers outside the timed span
+    n_rows, n_ids = clips.agg(F.count("*"), F.countDistinct("clip_id")).first()
+    if n_ids != n_rows:
+        raise RuntimeError(f"bench table repeats clip_ids: {n_ids} ids, {n_rows} rows")
     t0 = time.time()
     labels = pipeline.run_pipeline(clips)
     labels.write.format("noop").mode("overwrite").save()
@@ -412,7 +429,7 @@ def main() -> int:
         return 0
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     print(json.dumps(run_default(cpus, sf_dir, args.n_clips)))
     return 0
 

@@ -64,8 +64,10 @@ CODEC_ALLOWLIST = ("pcm_s16le", "flac", "opus", "mp3", "mulaw", "alaw",
 
 
 def canon_codec(codec) -> str | None:
-    """Python-side mirror of heuristics.canon_codec_col (for the scoring
-    UDF, which must pick a decoder before the JVM-side recode runs)."""
+    """lower/strip + alias->canonical map (graft of the 16-way subtype
+    recode chain HOME->HO ... OTHER->OA/OT, Step1-Read-Data-Formatting.R:
+    76-93).  The engine's one codec canonicalizer: the scoring UDF picks
+    the decoder with it and emits the result as `canon_codec`."""
     if not isinstance(codec, str):
         return None
     lowered = codec.strip().lower()

@@ -1,63 +1,30 @@
-"""Heuristic rule columns — ALL native Column expressions (JVM-side,
+"""Heuristic rule columns — native Column comparisons (JVM-side,
 whole-stage-codegen; no Python in this path).
 
 Each rule grafts a reference check (file:line cited per rule).  Flag
 semantics are tri-valued-free: every flag is a non-null boolean; a rule
 that cannot be evaluated for a row (e.g. chars/sec with dur_ms <= 0) is
 False — the rule that *made* it unevaluable fires instead, earlier in
-RULE_ORDER.  The pure-pandas oracle (tests/oracle.py) implements the same
-definitions independently.
+RULE_ORDER.  Codec and transcript string rules are decided once, in the
+scoring UDF: it emits `canon_codec` (config.canon_codec) and the three
+text flags (repair.text_flags), so this module only compares.  The
+pure-pandas oracle (tests/oracle.py) implements the same definitions
+independently.
 """
 
 from __future__ import annotations
 
-from itertools import chain
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import config
 
 
-def canon_codec_col(codec: Column) -> Column:
-    """lower/trim + alias->canonical map (graft of the 16-way subtype recode
-    chain HOME->HO ... OTHER->OA/OT, Step1-Read-Data-Formatting.R:76-93)."""
-    lowered = F.lower(F.trim(codec))
-    alias_map = F.create_map(
-        *chain.from_iterable((F.lit(k), F.lit(v))
-                             for k, v in config.CODEC_ALIASES.items()))
-    return F.coalesce(F.element_at(alias_map, lowered), lowered)
-
-
-def alpha_ratio_col(t: Column) -> Column:
-    """Unicode-letter fraction of the transcript (null when unevaluable).
-    Shared by the heuristic pass and the repair merge-back so repaired rows
-    never carry stats computed from the pre-repair text."""
-    n_chars = F.length(t)
-    n_alpha = F.length(F.regexp_replace(t, r"[^\p{L}]", ""))
-    return F.when(t.isNotNull() & (n_chars > 0),
-                  n_alpha.cast("double") / n_chars.cast("double"))
-
-
-def chars_per_sec_col(t: Column, dur: Column) -> Column:
-    """Transcript chars per second of audio (null when unevaluable)."""
-    n_chars = F.length(t)
-    return F.when(t.isNotNull() & (n_chars > 0) & dur.isNotNull() & (dur > 0),
-                  n_chars.cast("double") / (dur.cast("double") / F.lit(1000.0)))
-
-
 def with_heuristic_flags(df: DataFrame) -> DataFrame:
-    """Adds canon_codec, alpha_ratio, chars_per_sec and one boolean flag
-    column per heuristic rule (f_DUR_BOUNDS, ...)."""
-    t = F.col("transcript")
+    """Adds f_DUR_BOUNDS, f_SR_INVALID and f_CODEC_INVALID; f_TXT_EMPTY,
+    f_TXT_LEN and f_CHAR_RATIO come from the scoring UDF unchanged."""
     dur = F.col("dur_ms")
-
-    df = df.withColumn("canon_codec", canon_codec_col(F.col("codec")))
-
-    n_chars = F.length(t)
-    alpha_ratio = alpha_ratio_col(t)
-    cps = chars_per_sec_col(t, dur)
-    df = df.withColumn("alpha_ratio", alpha_ratio).withColumn("chars_per_sec", cps)
+    codec = F.col("canon_codec")
 
     # DUR_BOUNDS: graft of `endtime > starttime` (Step1:66-68) + the
     # day-long-gap cap `duration < 1440` min (Step3:96)
@@ -66,35 +33,14 @@ def with_heuristic_flags(df: DataFrame) -> DataFrame:
     # SR_INVALID: allowlist membership (domain checks, Step1:76-93)
     f_sr = ~F.col("sr_hz").isin(*config.SR_ALLOWLIST) | F.col("sr_hz").isNull()
 
-    # CODEC_INVALID: canonicalized allowlist membership
-    f_codec = (~F.col("canon_codec").isin(*config.CODEC_ALLOWLIST)
-               | F.col("canon_codec").isNull())
-
-    # TXT_EMPTY: graft of missing-route detection (Step2:3, -999 sentinel).
-    # regexp \s (not trim()) so tabs/newlines count as whitespace, matching
-    # Python str.strip() in the oracle.
-    f_empty = t.isNull() | (F.length(F.regexp_replace(t, r"\s", "")) == 0)
-
-    # TXT_LEN: length bounds
-    f_len = F.when(t.isNotNull(),
-                   (n_chars < config.TXT_LEN_MIN) | (n_chars > config.TXT_LEN_MAX)
-                   ).otherwise(F.lit(False))
-
-    # CHAR_RATIO: alpha-ratio floor + impossible chars/sec rate
-    # (graft of the impossible-speed filter `speed < 90` m/s, Step3:135)
-    f_ratio = (
-        F.coalesce(alpha_ratio < config.ALPHA_RATIO_MIN, F.lit(False))
-        | F.coalesce(cps > config.CHARS_PER_SEC_MAX, F.lit(False))
-        | F.coalesce(cps < config.CHARS_PER_SEC_MIN, F.lit(False))
-    )
+    # CODEC_INVALID: membership of the canonicalized codec (graft of the
+    # 16-way subtype recode chain, Step1-Read-Data-Formatting.R:76-93)
+    f_codec = codec.isNull() | ~codec.isin(*config.CODEC_ALLOWLIST)
 
     return (df
             .withColumn("f_" + config.RULE_DUR_BOUNDS, f_dur)
             .withColumn("f_" + config.RULE_SR_INVALID, f_sr)
-            .withColumn("f_" + config.RULE_CODEC_INVALID, f_codec)
-            .withColumn("f_" + config.RULE_TXT_EMPTY, f_empty)
-            .withColumn("f_" + config.RULE_TXT_LEN, f_len)
-            .withColumn("f_" + config.RULE_CHAR_RATIO, f_ratio))
+            .withColumn("f_" + config.RULE_CODEC_INVALID, f_codec))
 
 
 def with_model_flags(df: DataFrame) -> DataFrame:

@@ -1,7 +1,7 @@
 """The fused end-to-end pipeline (SURVEY.md §4.3).
 
-    scan -> [native heuristic flags ∥ fused scoring UDF] -> dup flags
-         -> decision -> labels (+ lineage metrics)
+    scan -> fused scoring UDF (decode, repair, text rules, models)
+         -> native flag comparisons -> dup flags -> decision -> labels
 
 One DataFrame pass; the only shuffles are (a) the two hash-group windows
 and the band self-join inside dedup, (b) the lineage aggregation.  The

@@ -24,18 +24,18 @@ scoring), because every earlier design lost at scale:
   * fusing it into the already-mandatory Python crossing costs only the
     normalization work itself, on candidate rows only, perfectly
     distributed, with no new shuffle, join, union, or cached table —
-    and downstream heuristic flags evaluate the repaired transcript
-    naturally, so no flag-clearing merge exists at all.
+    and the text flags are evaluated on the final transcript, so no
+    flag-clearing merge exists at all.
 
-The rules evaluated here mirror engine/operators/heuristics.py exactly
-(TXT_LEN bounds; CHAR_RATIO = alpha-ratio floor + chars/sec band).
-Python `str.isalpha()` and the heuristics' Java `\\p{L}` both match
-Unicode categories Lu/Ll/Lt/Lm/Lo, so the candidate predicate here and
-the flag recompute there agree.
+`text_flags` is the one definition of the transcript rules (TXT_EMPTY,
+TXT_LEN, CHAR_RATIO): the scoring UDF evaluates it on the final
+transcript and emits the three flags, so the native heuristics only pass
+them through.
 
-Whitespace class is ASCII-EXPLICIT here and in the oracle: Python's re
-\\s also matches unicode spaces (and Java's does not), so the
-normalization regex never uses bare \\s.
+Whitespace class is ASCII-EXPLICIT in the normalization here and in the
+oracle: Python's re \\s also matches unicode spaces, so the
+normalization regex never uses bare \\s.  TXT_EMPTY is `str.strip()`,
+which does strip unicode spaces (a transcript of only NBSPs is empty).
 """
 
 from __future__ import annotations
@@ -53,21 +53,25 @@ def normalize_text(t: str) -> str:
     return _WS_RE.sub(" ", _CTRL_RE.sub(" ", t)).strip(" ")
 
 
-def _fails_text_rules(t: str, dur_ms: int | None) -> bool:
-    """True iff TXT_LEN or CHAR_RATIO fires for this transcript — the same
-    definitions as heuristics.with_heuristic_flags, null semantics and all
-    (an unevaluable sub-predicate contributes False)."""
+def text_flags(t: str | None, dur_ms: int | None) -> tuple[bool, bool, bool]:
+    """(TXT_EMPTY, TXT_LEN, CHAR_RATIO) for one transcript.  TXT_EMPTY is
+    the graft of missing-route detection (Step2:3, -999 sentinel); TXT_LEN
+    the length bounds; CHAR_RATIO the alpha-ratio floor plus the graft of
+    the impossible-speed filter `speed < 90` m/s (Step3:135) as a chars/sec
+    band.  A null transcript is empty and nothing else; an unevaluable
+    sub-predicate (chars/sec with dur_ms null or <= 0) contributes False."""
+    if t is None:
+        return True, False, False
     n = len(t)
-    if n < config.TXT_LEN_MIN or n > config.TXT_LEN_MAX:
-        return True
+    txt_len = n < config.TXT_LEN_MIN or n > config.TXT_LEN_MAX
+    char_ratio = False
     if n > 0:
-        if sum(ch.isalpha() for ch in t) / n < config.ALPHA_RATIO_MIN:
-            return True
+        char_ratio = sum(map(str.isalpha, t)) / n < config.ALPHA_RATIO_MIN
         if dur_ms is not None and dur_ms > 0:
             cps = n / (dur_ms / 1000.0)
-            if cps > config.CHARS_PER_SEC_MAX or cps < config.CHARS_PER_SEC_MIN:
-                return True
-    return False
+            char_ratio = (char_ratio or cps > config.CHARS_PER_SEC_MAX
+                          or cps < config.CHARS_PER_SEC_MIN)
+    return t.strip() == "", txt_len, char_ratio
 
 
 def repair_batch(transcripts: list[str | None],
@@ -84,10 +88,11 @@ def repair_batch(transcripts: list[str | None],
         if t is None:
             continue
         dur = durs[i]
-        if not _fails_text_rules(t, dur):
+        _, txt_len, char_ratio = text_flags(t, dur)
+        if not (txt_len or char_ratio):
             continue
         norm = normalize_text(t)
-        if norm != t and len(norm) > 0 and not _fails_text_rules(norm, dur):
+        if norm != t and len(norm) > 0 and not any(text_flags(norm, dur)):
             out[i] = norm
             repaired[i] = True
     return out, repaired

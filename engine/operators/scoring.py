@@ -34,14 +34,19 @@ from pyspark.sql import types as T
 from .. import audio_core, config, lid_core, ppl_core, scrub_core, simhash_core
 from . import repair
 
+# (TXT_EMPTY, TXT_LEN, CHAR_RATIO) from repair.text_flags, in that order
+_TEXT_FLAG_COLUMNS = ["f_" + r for r in (
+    config.RULE_TXT_EMPTY, config.RULE_TXT_LEN, config.RULE_CHAR_RATIO)]
+
 SCORED_FIELDS = [
     T.StructField("clip_id", T.StringType(), False),
     T.StructField("part_id", T.IntegerType(), False),
     T.StructField("sr_hz", T.IntegerType(), True),
     T.StructField("dur_ms", T.IntegerType(), True),
-    T.StructField("codec", T.StringType(), True),
+    T.StructField("canon_codec", T.StringType(), True),
     T.StructField("transcript", T.StringType(), True),
     T.StructField("repaired", T.BooleanType(), False),
+    *[T.StructField(c, T.BooleanType(), False) for c in _TEXT_FLAG_COLUMNS],
     T.StructField("decoded_dur_ms", T.IntegerType(), True),
     T.StructField("n_samples", T.IntegerType(), True),
     T.StructField("rms", T.DoubleType(), True),
@@ -76,8 +81,11 @@ def _score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     silence = [None] * n
     flatness = [None] * n
     mel = [None] * n
+    # the one codec canonicalization: it picks the decoder here, and the
+    # native CODEC_INVALID rule only compares the emitted column
+    canon = [config.canon_codec(c) for c in pdf["codec"]]
     for i, (payload, sr, codec) in enumerate(
-            zip(pdf["bytes"], pdf["sr_hz"], pdf["codec"])):
+            zip(pdf["bytes"], pdf["sr_hz"], canon)):
         sr_i = int(sr) if pd.notna(sr) else None
         p = bytes(payload) if payload is not None else None
         # analyze() picks the decoder by canonical codec and decodes +
@@ -85,17 +93,18 @@ def _score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         # payload is the dominant per-row volume); undecodable bytes yield
         # null features, never PCM-interpreted garbage
         u, (d, ns, r, cr, ck), (sil, flat, mp) = audio_core.analyze(
-            p, sr_i, config.canon_codec(codec))
+            p, sr_i, codec)
         undec[i] = u
         dec_dur[i], n_samp[i], rms[i], clip_ratio[i], checksum[i] = d, ns, r, cr, ck
         silence[i], flatness[i], mel[i] = sil, flat, mp
 
     # repair-then-rescore fused into this one crossing (repair.py module
     # docstring explains why no separate rescore stage exists): candidates
-    # get normalized here, so scrub/LID/PPL/simhash below — and every
-    # downstream native rule — score the FINAL transcript
+    # get normalized here, so the text flags and scrub/LID/PPL/simhash
+    # below score the FINAL transcript
     durs = [int(d) if pd.notna(d) else None for d in pdf["dur_ms"]]
     transcripts, repaired = repair.repair_batch(pdf["transcript"].tolist(), durs)
+    flags = [repair.text_flags(t, d) for t, d in zip(transcripts, durs)]
     scrubbed, hits, severe = scrub_core.scrub_batch(transcripts)
     langs, margins = lid_core.score_batch(scrubbed)
     ppls = ppl_core.perplexity_batch(scrubbed, langs)
@@ -107,7 +116,7 @@ def _score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         "part_id": pdf["part_id"].values,
         "sr_hz": pdf["sr_hz"].values,
         "dur_ms": pdf["dur_ms"].values,
-        "codec": pdf["codec"].values,
+        "canon_codec": canon,
         "transcript": transcripts,
         "repaired": repaired,
         "decoded_dur_ms": pd.array(dec_dur, dtype="Int32"),
@@ -127,6 +136,8 @@ def _score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         "ppl_score": ppls,
         "simhash": sims,
     })
+    for j, col in enumerate(_TEXT_FLAG_COLUMNS):
+        out[col] = [f[j] for f in flags]
     for i in range(4):
         out[f"band{i}"] = band_vals[:, i]
     return out

@@ -175,12 +175,14 @@ def _elbow_from_wss(wss: list[float]) -> int:
     """Curvature elbow over a WSS scan: argmax of the second difference
     of log(WSS+eps), defined at k = 2..len(wss)-1 (the discrete curvature
     criterion; clusGap's B=50 bootstrap is a seed lottery the engine
-    deliberately replaces with a closed-form, reproducible statistic)."""
+    deliberately replaces with a closed-form, reproducible statistic).
+    The scan runs one step past the largest electable k, so the answer
+    never exceeds len(wss)-1, also when the curvature is undefined."""
     logw = np.log(np.asarray(wss) + 1e-12)
     if len(wss) >= 3:
         curv = logw[:-2] - 2 * logw[1:-1] + logw[2:]
         return int(np.argmax(curv)) + 2
-    return len(wss)
+    return max(1, len(wss) - 1)
 
 
 def propose_strata(centers: np.ndarray, counts: np.ndarray,
@@ -202,10 +204,11 @@ def propose_strata(centers: np.ndarray, counts: np.ndarray,
     strictly increase.  ONE DP pass serves both the diagnostics (the
     deterministic analog of the reference's wss-scan + clusGap model
     selection, Step2-Data-Incompleteness.R:223-224, Step3:377-379) and
-    the backtrack."""
+    the backtrack; the diagnostics report k = 1..k_max, the k range a
+    proposal can elect."""
     wss, back = _kmeans_dp(centers, counts, k_max + 1)
-    diag = {"k": list(range(1, k_max + 2)),
-            "wss": [round(v, 6) for v in wss],
+    diag = {"k": list(range(1, k_max + 1)),
+            "wss": [round(v, 6) for v in wss[:k_max]],
             "elbow_k": _elbow_from_wss(wss)}
     k = max(1, min(diag["elbow_k"], k_max, int(np.count_nonzero(counts))))
     bounds = _boundaries_from_back(centers, counts, back, k)

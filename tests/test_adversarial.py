@@ -83,3 +83,33 @@ def test_adversarial_rows_engine_matches_oracle(spark, tmp_path):
     for i in range(len(eng)):
         assert eng["rule_flags"].iloc[i] == ora["rule_flags"].iloc[i], \
             eng["clip_id"].iloc[i]
+
+
+def test_unicode_whitespace_rows_engine_matches_oracle(spark, tmp_path):
+    """Codec and transcript edits the ASCII-only JVM trim/regex got wrong:
+    a codec padded with a tab, a newline or an NBSP is still pcm_s16le,
+    and a transcript of only NBSP, U+001F or EM SPACE is TXT_EMPTY (the
+    Python str.strip() definition both sides now share)."""
+    clips_pd, _ = fixtures.generate_clips(60, seed=7)
+    before = oracle.label_clips(clips_pd).set_index("clip_id")
+    picks = [cid for cid, codec in zip(clips_pd["clip_id"], clips_pd["codec"])
+             if codec == "pcm_s16le" and before.loc[cid, "keep"]][:6]
+    edits = [("codec", "pcm_s16le\t"), ("codec", "pcm_s16le\n"),
+             ("codec", "\xa0pcm_s16le"), ("transcript", "\xa0" * 12),
+             ("transcript", "\x1f" * 12), ("transcript", "\u2003" * 12)]
+    clips_pd = clips_pd.set_index("clip_id")
+    for cid, (col, val) in zip(picks, edits):
+        clips_pd.loc[cid, col] = val
+    clips_pd = clips_pd.reset_index()
+    path = str(tmp_path / "ws_clips")
+    fixtures.write_clips_parquet(spark, clips_pd, path)
+
+    eng = (pipeline.run_pipeline(pipeline.read_clips(spark, path))
+           .toPandas().set_index("clip_id"))
+    ora = oracle.label_clips(clips_pd).set_index("clip_id")
+    assert ora.loc[picks[:3], "keep"].all()
+    assert (ora.loc[picks[3:], "drop_reason"] == "TXT_EMPTY").all()
+    for cid in picks:
+        assert eng.loc[cid, "keep"] == ora.loc[cid, "keep"], cid
+        assert eng.loc[cid, "drop_reason"] == ora.loc[cid, "drop_reason"], cid
+    assert eng["keep"].sort_index().tolist() == ora["keep"].sort_index().tolist()

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -476,6 +478,28 @@ def test_adpcm_pure_paths_match_audioop():
         want_dec, _ = audioop.adpcm2lin(want_enc, 2, None)
         assert np.array_equal(audio_core._adpcm_decode_py(want_enc),
                               np.frombuffer(want_dec, dtype=np.int16))
+
+
+def test_adpcm_pure_paths_match_golden_stream():
+    """The pure-Python encoder and decoder against a checked-in stream that
+    stdlib audioop (CPython 3.11) produced: 4,000 seeded samples (a
+    windowed two-tone burst, full-range noise that drives the step index
+    to its ceiling, silence that lets it decay, low-level noise, a
+    rail-to-rail square wave), their `lin2adpcm` bytes and the
+    `adpcm2lin` decode of those bytes.  No audioop import, so 3.13+ still
+    pins the whole recursion against C-generated output."""
+    data = os.path.join(os.path.dirname(__file__), "data")
+
+    def read(name: str) -> bytes:
+        with open(os.path.join(data, name), "rb") as fh:
+            return fh.read()
+
+    pcm = np.frombuffer(read("adpcm_ima_pcm.s16le"), dtype="<i2")
+    stream = read("adpcm_ima_stream.adpcm")
+    decoded = np.frombuffer(read("adpcm_ima_decoded.s16le"), dtype="<i2")
+    assert pcm.size == decoded.size == 2 * len(stream) == 4000
+    assert audio_core._adpcm_encode_py(pcm) == stream
+    assert np.array_equal(audio_core._adpcm_decode_py(stream), decoded)
 
 
 def test_adpcm_roundtrip_snr_and_compression():

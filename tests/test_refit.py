@@ -149,7 +149,7 @@ def test_optimal_1d_kmeans_wss_exact_small():
     best2 = min(sse(range(0, i)) + sse(range(i, n)) for i in range(1, n))
     best3 = min(sse(range(0, i)) + sse(range(i, j)) + sse(range(j, n))
                 for i, j in itertools.combinations(range(1, n), 2))
-    # the refit JSON's diagnostics: wss[k-1] for k = 1..k_max+1, 6 dp
+    # the refit JSON's diagnostics: wss[k-1] for k = 1..k_max, 6 dp
     wss = refit.propose_strata(x, w, k_max=3)["diagnostics"]["wss"]
     assert abs(wss[1] - best2) < 1e-6
     assert abs(wss[2] - best3) < 1e-6
@@ -176,6 +176,11 @@ def test_cluster_diagnostics_elbow_finds_true_k():
     d2 = refit.propose_strata(centers, counts, k_max=6)["diagnostics"]
     assert d1 == d2  # deterministic
     assert d1["elbow_k"] == 3
+    # one entry per electable k: 1..k_max, at the default k_max too
+    default = refit.propose_strata(centers, counts)["diagnostics"]
+    assert default["k"] == list(range(1, 9)) and len(default["wss"]) == 8
+    one = refit.propose_strata(centers, counts, k_max=1)
+    assert one["k"] == one["diagnostics"]["elbow_k"] == 1
     assert d1["wss"][2] < 0.1 * d1["wss"][0]  # k=3 explains the structure
 
 

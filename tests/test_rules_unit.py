@@ -7,34 +7,31 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from engine import config
-from engine.operators import heuristics
+from engine.operators import heuristics, repair
 
 
-def _df(spark, rows):
+def _flags(spark, rows) -> pd.DataFrame:
+    """rows of (clip_id, sr_hz, dur_ms, canon_codec) -> heuristic flags."""
     schema = T.StructType([
         T.StructField("clip_id", T.StringType()),
         T.StructField("sr_hz", T.IntegerType()),
         T.StructField("dur_ms", T.IntegerType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("transcript", T.StringType()),
+        T.StructField("canon_codec", T.StringType()),
     ])
-    return spark.createDataFrame(rows, schema)
-
-
-def _flags(spark, rows) -> pd.DataFrame:
-    out = heuristics.with_heuristic_flags(_df(spark, rows)).toPandas()
+    out = heuristics.with_heuristic_flags(
+        spark.createDataFrame(rows, schema)).toPandas()
     return out.set_index("clip_id")
 
 
 def test_dur_bounds(spark):
     f = _flags(spark, [
-        ("ok", 16000, 5000, "mp3", "hello there"),
-        ("low", 16000, 299, "mp3", "x"),
-        ("edge_low", 16000, 300, "mp3", "x"),
-        ("high", 16000, 120001, "mp3", "x"),
-        ("edge_high", 16000, 120000, "mp3", "x"),
-        ("null", 16000, None, "mp3", "x"),
-        ("neg", 16000, -5, "mp3", "x"),
+        ("ok", 16000, 5000, "mp3"),
+        ("low", 16000, 299, "mp3"),
+        ("edge_low", 16000, 300, "mp3"),
+        ("high", 16000, 120001, "mp3"),
+        ("edge_high", 16000, 120000, "mp3"),
+        ("null", 16000, None, "mp3"),
+        ("neg", 16000, -5, "mp3"),
     ])
     col = "f_" + config.RULE_DUR_BOUNDS
     assert not f.loc["ok", col] and not f.loc["edge_low", col] \
@@ -45,9 +42,9 @@ def test_dur_bounds(spark):
 
 def test_sr_allowlist(spark):
     f = _flags(spark, [
-        ("a", 16000, 1000, "mp3", "x"), ("b", 44100, 1000, "mp3", "x"),
-        ("c", 96000, 1000, "mp3", "x"), ("d", 0, 1000, "mp3", "x"),
-        ("e", None, 1000, "mp3", "x"),
+        ("a", 16000, 1000, "mp3"), ("b", 44100, 1000, "mp3"),
+        ("c", 96000, 1000, "mp3"), ("d", 0, 1000, "mp3"),
+        ("e", None, 1000, "mp3"),
     ])
     col = "f_" + config.RULE_SR_INVALID
     assert not f.loc["a", col] and not f.loc["b", col]
@@ -55,56 +52,60 @@ def test_sr_allowlist(spark):
 
 
 def test_codec_canonicalization(spark):
-    """Graft of the subtype recode chain (Step1:76-93)."""
-    f = _flags(spark, [
-        ("clean", 16000, 1000, "mp3", "x"),
-        ("upper", 16000, 1000, "MP3", "x"),
-        ("alias", 16000, 1000, "mpeg3", "x"),
-        ("spacey", 16000, 1000, " Flac ", "x"),
-        ("wav", 16000, 1000, "wav", "x"),
-        ("bad", 16000, 1000, "xvc9", "x"),
-        ("empty", 16000, 1000, "", "x"),
-        ("null", 16000, 1000, None, "x"),
-    ])
-    assert f.loc["upper", "canon_codec"] == "mp3"
-    assert f.loc["alias", "canon_codec"] == "mp3"
-    assert f.loc["spacey", "canon_codec"] == "flac"
-    assert f.loc["wav", "canon_codec"] == "pcm_s16le"
+    """Graft of the subtype recode chain (Step1:76-93): config.canon_codec
+    canonicalizes (str.strip, so tabs, newlines and NBSP go too), the
+    native rule only tests allowlist membership."""
+    raw = {
+        "clean": "mp3", "upper": "MP3", "alias": "mpeg3", "spacey": " Flac ",
+        "wav": "wav", "tab": "pcm_s16le\t", "nbsp": "\xa0pcm_s16le",
+        "bad": "xvc9", "empty": "", "null": None,
+    }
+    canon = {cid: config.canon_codec(c) for cid, c in raw.items()}
+    assert canon["upper"] == canon["alias"] == "mp3"
+    assert canon["spacey"] == "flac"
+    assert canon["wav"] == canon["tab"] == canon["nbsp"] == "pcm_s16le"
+    assert canon["null"] is None
+    f = _flags(spark, [(cid, 16000, 1000, c) for cid, c in canon.items()])
     col = "f_" + config.RULE_CODEC_INVALID
-    for cid in ("clean", "upper", "alias", "spacey", "wav"):
+    for cid in ("clean", "upper", "alias", "spacey", "wav", "tab", "nbsp"):
         assert not f.loc[cid, col], cid
     for cid in ("bad", "empty", "null"):
         assert f.loc[cid, col], cid
 
 
-def test_txt_empty_and_len(spark):
-    f = _flags(spark, [
-        ("ok", 16000, 1000, "mp3", "abc"),
-        ("null", 16000, 1000, "mp3", None),
-        ("blank", 16000, 1000, "mp3", "  \t "),
-        ("short", 16000, 1000, "mp3", "ab"),
-        ("long", 16000, 200000, "mp3", "a" * 5001),
-        ("edge", 16000, 200000, "mp3", "a" * 5000),
-    ])
-    e, l = "f_" + config.RULE_TXT_EMPTY, "f_" + config.RULE_TXT_LEN
-    assert not f.loc["ok", e] and not f.loc["ok", l]
-    assert f.loc["null", e] and not f.loc["null", l]
-    assert f.loc["blank", e]
-    assert f.loc["short", l] and f.loc["long", l] and not f.loc["edge", l]
+def test_txt_empty_and_len():
+    f = {cid: repair.text_flags(t, dur) for cid, t, dur in [
+        ("ok", "abc", 1000),
+        ("null", None, 1000),
+        ("blank", "  \t ", 1000),
+        ("nbsp", "\xa0\xa0\xa0", 1000),
+        ("unit_sep", "\x1f\x1f\x1f", 1000),
+        ("em_space", "\u2003\u2003\u2003", 1000),
+        ("short", "ab", 1000),
+        ("long", "a" * 5001, 200000),
+        ("edge", "a" * 5000, 200000),
+    ]}
+    assert f["ok"][:2] == (False, False)
+    assert f["null"] == (True, False, False)
+    for cid in ("blank", "nbsp", "unit_sep", "em_space"):
+        assert f[cid][0], cid
+    assert f["short"][1] and f["long"][1] and not f["edge"][1]
 
 
-def test_char_ratio(spark):
-    f = _flags(spark, [
-        ("ok", 16000, 2000, "mp3", "twenty chars of text"),       # 10 cps
-        ("digits", 16000, 2000, "mp3", "123456 789 012 345 678"),  # alpha 0
-        ("fast", 16000, 1000, "mp3", "x" * 60),                    # 60 cps
-        ("slow", 16000, 60000, "mp3", "abcd"),                     # 0.07 cps
-        ("unicode", 16000, 2000, "mp3", "кира миало тета болу"),   # cyrillic is alpha
-    ])
-    col = "f_" + config.RULE_CHAR_RATIO
-    assert not f.loc["ok", col] and not f.loc["unicode", col]
-    assert f.loc["digits", col] and f.loc["fast", col] and f.loc["slow", col]
-    assert abs(f.loc["ok", "chars_per_sec"] - 10.0) < 1e-9
+def test_char_ratio():
+    f = {cid: repair.text_flags(t, dur)[2] for cid, t, dur in [
+        ("ok", "twenty chars of text", 2000),       # 10 cps
+        ("digits", "123456 789 012 345 678", 2000),  # alpha 0
+        ("fast", "x" * 60, 1000),                    # 60 cps
+        ("edge_fast", "x" * 50, 1000),               # 50 cps, the bound
+        ("slow", "abcd", 60000),                     # 0.07 cps
+        ("unicode", "кира миало тета болу", 2000),   # cyrillic is alpha
+        ("no_dur", "abcd", None),                    # rate unevaluable
+        ("zero_dur", "abcd", 0),
+    ]}
+    assert not f["ok"] and not f["unicode"] and not f["edge_fast"]
+    assert not f["no_dur"] and not f["zero_dur"]
+    assert f["digits"] and f["fast"] and f["slow"]
 
 
 def test_model_flag_dur_mismatch(spark):
@@ -210,17 +211,18 @@ def test_repair_batch_invariants(t, dur):
     from tests import oracle
 
     out, rep = repair.repair_batch([t], [dur])
-    if not repair._fails_text_rules(t, dur):
+    fails = any(repair.text_flags(t, dur)[1:])  # TXT_LEN or CHAR_RATIO
+    if not fails:
         assert out == [t] and rep == [False]
     if rep[0]:
         assert out[0] != t and len(out[0]) > 0
-        assert not repair._fails_text_rules(out[0], dur)
+        assert not any(repair.text_flags(out[0], dur))
     else:
         assert out[0] == t
 
     # oracle agreement (the same decision the pandas oracle makes)
     exp_rep, exp_t = False, t
-    if repair._fails_text_rules(t, dur):
+    if fails:
         norm = oracle._normalize(t)
         if norm != t and len(norm) > 0:
             ok = config.TXT_LEN_MIN <= len(norm) <= config.TXT_LEN_MAX
@@ -234,6 +236,44 @@ def test_repair_batch_invariants(t, dur):
             if ok:
                 exp_rep, exp_t = True, norm
     assert (rep[0], out[0]) == (exp_rep, exp_t)
+
+
+_SPACES = ["\t", "\n", "\r", "\x0b", "\x0c", "\x1c", "\x1f", "\x85",
+           "\xa0", "\u1680", "\u2003", "\u2028", "\u3000", "\u200b", " "]
+_spacey = st.text(alphabet=st.sampled_from(_SPACES), max_size=4)
+_codec_names = st.sampled_from(
+    sorted(config.CODEC_ALIASES) + ["", "xvc9", "PCM_S16LE", "Mp3"])
+_codecs = (st.none()
+           | st.builds(lambda a, c, b: a + c + b, _spacey, _codec_names, _spacey)
+           | st.text(max_size=12))
+_transcripts = (st.none()
+                | st.text(alphabet=st.sampled_from(_SPACES + ["a", "b", "1"]),
+                          max_size=12)
+                | _any_text)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_codecs, _transcripts,
+       st.integers(min_value=-5, max_value=10 ** 7) | st.none())
+def test_score_batch_string_rules_match_oracle(codec, t, dur):
+    """The scoring UDF decides CODEC_INVALID (via the canon_codec it emits)
+    and TXT_EMPTY / TXT_LEN / CHAR_RATIO exactly as the pandas oracle does,
+    for any codec string, transcript and duration, Unicode whitespace and
+    control characters included."""
+    from engine.operators import scoring
+    from tests import oracle
+
+    row = {"clip_id": "c0", "part_id": 0, "bytes": None, "sr_hz": 16000,
+           "dur_ms": dur, "codec": codec, "transcript": t}
+    out = scoring._score_batch(pd.DataFrame([row])).iloc[0]
+    exp = oracle.label_clips(
+        pd.DataFrame([row]).drop(columns="part_id")).iloc[0]["rule_flags"]
+    canon = out["canon_codec"]
+    assert (canon not in config.CODEC_ALLOWLIST) \
+        == exp[config.RULE_CODEC_INVALID], canon
+    for rule in (config.RULE_TXT_EMPTY, config.RULE_TXT_LEN,
+                 config.RULE_CHAR_RATIO):
+        assert bool(out["f_" + rule]) == exp[rule], rule
 
 
 # ---------------------------------------------------------------------------
